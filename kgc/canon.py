@@ -7,7 +7,16 @@ exist.  We canonicalize explicitly: build an undirected graph whose
 nodes are entity ids / co-referring aliases, and contract each connected
 component to its minimum node id ("canonical id").
 
-Algorithm: alternating large-star / small-star contraction
+Entity canonicalization (:func:`canonicalize_entities`) works on the
+alias dictionary, which already fits on the driver (the mention scanner
+broadcasts all of it): :func:`canonical_ids` runs a driver union-find
+over one star per normalized surface, on the dictionary rows
+kgc.pipeline.run has already collected.  It does not run star
+contraction.
+
+:func:`connected_components` is the distributed algorithm, for edge
+sets that do not fit the driver (near-duplicate clusters in kgc.dedup):
+alternating large-star / small-star contraction
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14) — O(log^2 n) rounds, each round two groupBy-min + join stages:
 
@@ -39,6 +48,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kgc.link import _norm_alias
 
 DEFAULT_SALT = 16
 
@@ -266,42 +277,50 @@ def incremental_components(
     )
 
 
+def canonical_ids(dictionary) -> list[tuple]:
+    """Collected (normalized alias, entity_id) rows → (entity_id,
+    canonical_id) for every entity id that shares a normalized surface
+    with another one; any other id is its own canonical id.
+
+    Entity ids sharing a surface (the same surface claimed by two
+    dictionary entries) are one entity, transitively; the component's
+    min id is canonical.  Each surface contributes a star from its first
+    id to every other id, so the driver union-find sees one edge per
+    dictionary row instead of the pairwise self-join's quadratic count.
+    Rows with a null surface or id join nothing, as in an equi-join.
+    """
+    hub: dict = {}
+    edges = []
+    for surface, eid in dictionary:
+        if surface is None or eid is None:
+            continue
+        first = hub.setdefault(surface, eid)
+        if first != eid:
+            edges.append((first, eid))
+    return _union_find_local(edges, sorted({x for e in edges for x in e}))
+
+
 def canonicalize_entities(
     linked: DataFrame,
     alias_df: DataFrame,
-    salt: int = DEFAULT_SALT,
+    dictionary=None,
 ) -> DataFrame:
     """linked mentions → add canonical_id per entity_id.
 
-    Edges: (1) dictionary structure — aliases sharing an entity_id are
-    one entity by construction; (2) cross-document co-mention evidence —
-    entity ids co-occurring in the same segment are NOT merged (that
-    would be wrong); instead we merge entity ids that share a normalized
-    alias surface (same surface claimed by two dictionary entries).
-    The component min becomes canonical_id.
+    Entity ids co-occurring in the same segment are NOT merged (that
+    would be wrong); ids that share a normalized alias surface are
+    (:func:`canonical_ids`).  ``dictionary`` is ``alias_df`` already
+    collected as (normalized alias, entity_id) rows, normalized by the
+    same Catalyst expression as the exact link (kgc.link._norm_alias);
+    without it this collects them, one job.  The mapping joins back as
+    a broadcast local relation.
     """
-    a = alias_df.select(
-        F.array_join(
-            F.regexp_extract_all(F.lower(F.col("alias")), F.lit(r"(?U)[^\W_]+"), 0), " "
-        ).alias("alias"),
-        "entity_id",
-    ).distinct()
-    # entity ids sharing a surface form → edge
-    shared = (
-        a.alias("x")
-        .join(a.alias("y"), "alias")
-        .select(F.col("x.entity_id").alias("src"), F.col("y.entity_id").alias("dst"))
-        .filter(F.col("src") < F.col("dst"))
-        .distinct()
+    if dictionary is None:
+        dictionary = alias_df.select(_norm_alias("alias"), "entity_id").collect()
+    id_type = linked.schema["entity_id"].dataType.simpleString()
+    comps = linked.sparkSession.createDataFrame(
+        canonical_ids(dictionary), f"entity_id {id_type}, component {id_type}"
     )
-    comps = connected_components(
-        shared.union(
-            a.select(F.col("entity_id").alias("src"), F.col("entity_id").alias("dst"))
-        ),
-        salt=salt,
-    )
-    return linked.join(
-        F.broadcast(comps.withColumnRenamed("node", "entity_id")), "entity_id", "left"
-    ).withColumn("canonical_id", F.coalesce(F.col("component"), F.col("entity_id"))).drop(
-        "component"
-    )
+    return linked.join(F.broadcast(comps), "entity_id", "left").withColumn(
+        "canonical_id", F.coalesce(F.col("component"), F.col("entity_id"))
+    ).drop("component")

@@ -1518,20 +1518,22 @@ def _expand_property_paths(
     return src
 
 
-def _compile_filter(f):
+def _compile_filter(f, cols=None):
     """One FILTER AST node → one Catalyst boolean Column.  Leaves are
     the tagged atoms parse_sparql emits; interior nodes are
     ("and"|"or", l, r) and ("not", e) from the &&/||/!() grammar.
     Spark's 3-valued logic reproduces SPARQL's error propagation:
     a NULL-valued (type-error / unbound) condition drops the row,
-    true || error is true, false && error is false."""
+    true || error is true, false && error is false.  With the
+    solution's ``cols`` given, bound(?v) over a variable not among them
+    is the constant false."""
     tag = f[0]
     if tag == "and":
-        return _compile_filter(f[1]) & _compile_filter(f[2])
+        return _compile_filter(f[1], cols) & _compile_filter(f[2], cols)
     if tag == "or":
-        return _compile_filter(f[1]) | _compile_filter(f[2])
+        return _compile_filter(f[1], cols) | _compile_filter(f[2], cols)
     if tag == "not":
-        return ~_compile_filter(f[1])
+        return ~_compile_filter(f[1], cols)
     if tag == "cmp":
         _, lhs, op, rhs = f
         lc = F.col(lhs[1:]) if lhs.startswith("?") else F.lit(lhs)
@@ -1573,6 +1575,8 @@ def _compile_filter(f):
         return F.col(var).rlike(pat)
     # ("bound", var, positive)
     _, var, positive = f
+    if cols is not None and var not in cols:
+        return F.lit(not positive)
     c = F.col(var)
     return c.isNotNull() if positive else c.isNull()
 
@@ -1585,7 +1589,7 @@ def _apply_filters(out: DataFrame, filters: list) -> DataFrame:
     the OPTIONAL-negation idiom; &&, ||, !() compile to Column
     &, |, ~ (_compile_filter)."""
     for f in filters:
-        out = out.filter(_compile_filter(f))
+        out = out.filter(_compile_filter(f, set(out.columns)))
     return out
 
 
@@ -2001,11 +2005,12 @@ def _solve_where(triples: DataFrame, q: dict, **bgp_kwargs) -> DataFrame:
             nullable.add(name)
 
     for f in q["filters"]:
-        missing = _filter_vars(f) - set(sol.columns)
+        missing = _filter_vars(f, bound_atoms=False) - set(sol.columns)
         if missing:
-            # a WHERE-level FILTER over a never-bound variable is a
-            # query bug every time (spec: constant error -> empty
-            # result); loud beats silently empty at 10^12 rows
+            # a WHERE-level FILTER using the value of a never-bound
+            # variable is a query bug every time (spec: constant error
+            # -> empty result); loud beats silently empty at 10^12 rows.
+            # bound(?v) is exempt: it is simply false.
             raise ValueError(
                 f"FILTER references variable ?{sorted(missing)[0]} "
                 "which is never bound in the group"
@@ -2034,13 +2039,17 @@ def _scalar_vars(ast) -> set[str]:
     return set()
 
 
-def _filter_vars(f) -> set[str]:
-    """Variables referenced by a boolean (FILTER) AST."""
+def _filter_vars(f, bound_atoms: bool = True) -> set[str]:
+    """Variables referenced by a boolean (FILTER) AST; without
+    ``bound_atoms``, those referenced only by [!]bound(?v) are left
+    out."""
     tag = f[0]
     if tag in ("and", "or"):
-        return _filter_vars(f[1]) | _filter_vars(f[2])
+        return _filter_vars(f[1], bound_atoms) | _filter_vars(f[2], bound_atoms)
     if tag == "not":
-        return _filter_vars(f[1])
+        return _filter_vars(f[1], bound_atoms)
+    if tag == "bound" and not bound_atoms:
+        return set()
     if tag == "cmp":
         return {t[1:] for t in (f[1], f[3]) if t.startswith("?")}
     if tag == "cmp2":

@@ -12,11 +12,11 @@ distributed:
   dictionary by minhash-LSH over character 3-gram shingles, candidate
   pairs verified with exact Jaccard, then scored like the exact path.
 
-Everything is Catalyst expressions — the minhash signature is an
-``array_min`` over md5 hashes (lexicographic min of uniform hex strings
-is a valid minhash), so the same computation is expressible in ANSI SQL
-for the DuckDB oracle.  md5 (not xxhash64) precisely so both engines
-produce identical values.
+Everything is Catalyst expressions — each minhash lane is a min over
+md5 hashes (lexicographic min of uniform hex strings is a valid
+minhash), so the same computation is expressible in ANSI SQL for the
+DuckDB oracle.  md5 (not xxhash64) precisely so both engines produce
+identical values.
 
 Scale notes: the alias dictionary is the small side everywhere
 (broadcast — no shuffle); the only wide exchange is the window top-1,
@@ -199,57 +199,6 @@ def make_shingle_band_udf(n: int = 3, k: int = 32, bands: int = 8):
 
 
 # -------------------------------------------------------------- minhash ---
-def minhash_lane(shingles: Column, i: int) -> Column:
-    """One minhash lane: min over shingles of md5(i|shingle)."""
-    return F.array_min(
-        F.transform(shingles, lambda s: F.md5(F.concat(F.lit(f"{i}|"), s)))
-    )
-
-
-def minhash_signature(shingles: Column, k: int = 32) -> Column:
-    """k-permutation minhash as array<string> of md5-hex minima.
-
-    Hash family i = md5(i || '|' || shingle); the min over shingles of a
-    uniform hash is the classic minhash estimator (Broder 1997).  Using
-    the hex string directly keeps the computation engine-portable
-    (identical in DuckDB for the oracle) at the cost of 32 bytes per
-    lane — fine, signatures are tiny next to the shingle sets.
-
-    CODEGEN NOTE (round-2 rewrite): lanes are DATA, not code — one
-    transform over sequence(0, k-1) with a single md5 call site, so the
-    generated/interpreted expression is O(1) in k.  Round 1 unrolled
-    the k lanes into one giant projection; the resulting classes
-    exhausted the JIT code cache and bench times degraded 30-80×
-    mid-session (VERDICT r1 "Performance").  `shingles` should be an
-    attribute from a previous projection (a cheap per-row array ref),
-    so per-lane re-reference costs nothing; the md5 work is identical
-    either way.  Hot scans should prefer :func:`lsh_band_keys`, which
-    additionally pushes the lane loop into a map-side-combining
-    aggregate.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                shingles, lambda s: F.md5(F.concat(i.cast("string"), F.lit("|"), s))
-            )
-        ),
-    )
-
-
-def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
-    """Signature → array<struct<band:int, key:string>> for the block
-    join.  Bands as data (sequence+transform), O(1) codegen in
-    ``bands`` — see minhash_signature's codegen note."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.md5(F.concat_ws("|", F.slice(sig, b * rows + 1, F.lit(rows)))).alias("key"),
-        ),
-    )
-
-
 def lsh_band_keys(
     df: DataFrame,
     shingle_col: str,
@@ -260,12 +209,13 @@ def lsh_band_keys(
     """(id_cols..., band, key) LSH band keys via explode + aggregate —
     the scale path for minhash banding.
 
-    Lanes ride as DATA: explode the shingle array, cross with
-    sequence(0, k-1), and take groupBy(min) per (id, lane).  Hash
-    values are bit-identical to :func:`minhash_signature` /
-    :func:`lsh_bands` (md5(lane || '|' || shingle), band key =
-    md5(concat_ws('|', lanes-in-band))), so the DuckDB oracle SQL is
-    unchanged.  Plan properties at scale:
+    Lane i (0 ≤ i < k) is min over shingles of md5(i || '|' ||
+    shingle) — the classic minhash estimator (Broder 1997) with hash
+    family i.  Band b's key is md5(concat_ws('|', lanes b·rows ..
+    (b+1)·rows-1)) in lane order, rows = k // bands; the DuckDB oracle
+    SQL replays the same formula.  Lanes ride as DATA: explode the
+    shingle array, cross with sequence(0, k-1), and take groupBy(min)
+    per (id, lane).  Plan properties at scale:
 
     * generated code is O(1) in k — one tiny md5 expression; no JIT
       code-cache pressure (the round-1 scale killer).
@@ -369,11 +319,12 @@ def link_fuzzy(
     """G3: LSH-block unmatched surfaces against the dictionary, verify
     with exact char-3gram Jaccard ≥ threshold, score = weight * jaccard.
 
-    The dictionary side is tiny → its banded form is broadcast; the
-    mention side computes band keys via :func:`lsh_band_keys` (lanes as
-    data — O(1) codegen, map-side-combined min; round-2 rewrite of the
-    round-1 k-wide unrolled projection that thrashed the JIT code
-    cache).  rows = k//bands.
+    Both sides get k md5 minhash lanes over their char 3-gram shingles
+    (lane i = min md5(i || '|' || shingle)) folded into ``bands`` keys
+    of rows = k//bands lanes each (key = md5 of the band's lanes joined
+    by '|'), via :func:`lsh_band_keys`; a candidate pair shares at
+    least one (band, key).  The dictionary side is tiny → its banded
+    form is broadcast.
     """
     m_base = unmatched.withColumn("_sh", char_shingles(surface_col))
     mb = lsh_band_keys(
@@ -451,8 +402,8 @@ def link_mentions(
     exact = link_exact(mentions, alias_df).select(*cols).withColumn(
         "method", F.lit("exact")
     )
+    exact._kgc_pinned = [mentions]  # released by kgc.pipeline.release
     if not fuzzy:
-        exact._kgc_pinned = [mentions]  # released by kgc.pipeline.release
         return exact
     missed = mentions.join(
         F.broadcast(
@@ -461,6 +412,13 @@ def link_mentions(
         "alias",
         "left_anti",
     )
+    # Mentions scanned from this same dictionary always hit exactly, and
+    # planning the LSH branch over an empty miss set still costs ~10
+    # jobs.  One count decides; it fills the mention cache the
+    # consumers read anyway.  count(), not isEmpty()/limit(1): on an
+    # empty result those scan partitions in growing rounds, a job each.
+    if missed.count() == 0:
+        return exact
     fz = link_fuzzy(missed, alias_df, threshold=threshold).select(*cols).withColumn(
         "method", F.lit("fuzzy")
     )

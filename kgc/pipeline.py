@@ -228,10 +228,15 @@ def run(
     (StageStore.write_bucketed).
     """
     alias_df = alias_df if alias_df is not None else _default_alias_df(spark)
-    # one driver-side distinct of the dictionary; detect_mentions ships
-    # it back out as a real sc.broadcast (once per worker), and the scan
-    # trie is built once per Python worker process (kgc/mentions.py)
-    aliases = [r["alias"] for r in alias_df.select("alias").distinct().collect()]
+    # The dictionary is collected once, with its surfaces normalized in
+    # the JVM: one job, no shuffle.  It must fit the driver anyway,
+    # since detect_mentions broadcasts all of it (once per worker; the
+    # scan trie is built once per Python worker, kgc/mentions.py), and
+    # canonical ids are then computed on the driver from the same rows.
+    dictionary = alias_df.select(
+        "alias", link._norm_alias("alias").alias("surface"), "entity_id"
+    ).collect()
+    aliases = list(dict.fromkeys(r["alias"] for r in dictionary))
     limit = seg_token_limit if seg_token_limit is not None else max_tokens
 
     if "spans" not in docs.columns:
@@ -301,7 +306,11 @@ def run(
         "linked", lambda: link.link_mentions(ment, alias_df, fuzzy=fuzzy)
     )
     linked_canon = stage(
-        "canonical", lambda: canon.canonicalize_entities(linked, alias_df)
+        "canonical",
+        lambda: canon.canonicalize_entities(
+            linked, alias_df,
+            dictionary=[(r["surface"], r["entity_id"]) for r in dictionary],
+        ),
     )
     typed_segs = classify_main_type(
         segs.select("doc_id", "seg_id"), linked_canon
@@ -352,13 +361,6 @@ def _default_alias_df(spark: SparkSession) -> DataFrame:
         [(a, e, t, w) for a, e, t, w in ALIASES],
         "alias string, entity_id string, entity_type string, weight double",
     )
-
-
-def run_metrics(stages: dict[str, DataFrame]) -> DataFrame:
-    lineage = metrics.stage_summary(
-        {k: v for k, v in stages.items() if k in ("segments", "mentions", "triples")}
-    )
-    return lineage
 
 
 def main() -> None:

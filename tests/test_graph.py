@@ -2182,3 +2182,19 @@ def test_sparql_filter_never_bound_var_loud(spark):
             _kg(spark),
             'SELECT ?e WHERE { ?e name ?n FILTER (?zz = "x") }',
         )
+
+
+def test_sparql_filter_bound_over_never_bound_var(spark):
+    """bound(?v) over a variable no group member binds is spec-valid:
+    bound is false, so !bound keeps every row and bound keeps none.
+    Only atoms that use the variable's value stay loud."""
+    from kgc.graph import sparql_query
+
+    def ents(where):
+        q = f"SELECT ?e WHERE {{ ?e name ?n FILTER ({where}) }}"
+        return sorted(r.e for r in sparql_query(_kg(spark), q).collect())
+
+    assert ents("!bound(?zz)") == ["ent:1", "ent:2"]
+    assert ents("bound(?zz)") == []
+    assert ents('!bound(?zz) && ?n = "Ada"') == ["ent:1"]
+    assert ents('bound(?zz) || ?n = "Paris"') == ["ent:2"]

@@ -183,6 +183,26 @@ def test_link_mentions_exact_precedence(spark):
     assert out[(1, "fuzzy")] == "E4"
 
 
+def test_link_mentions_all_exact_skips_fuzzy(spark):
+    """Mentions that all hit the dictionary exactly: fuzzy=True plans no
+    LSH branch and returns exactly the fuzzy=False rows."""
+    ment = spark.createDataFrame(
+        [("d1", 0, "paris", "Paris", 0, 1), ("d1", 1, "cour de cassation",
+                                             "Cour de Cassation", 2, 3)],
+        "doc_id string, seg_id int, alias string, surface string, tok_begin int, n_toks int",
+    )
+    adf = spark.createDataFrame(
+        [("Paris", "E4", "Place", 0.9), ("Cour de cassation", "E1", "Organization", 1.0)],
+        "alias string, entity_id string, entity_type string, weight double",
+    )
+    fz = link.link_mentions(ment, adf, threshold=0.4)
+    ex = link.link_mentions(ment, adf, fuzzy=False)
+    assert fz.columns == ex.columns
+    got = sorted(map(tuple, fz.collect()))
+    assert got == sorted(map(tuple, ex.collect())) and len(got) == 2
+    assert {r["method"] for r in fz.collect()} == {"exact"}
+
+
 # ----------------------------------------------------------- G5 compcc ---
 @pytest.mark.parametrize("threshold", [0, canon.SMALL_GRAPH_THRESHOLD],
                          ids=["distributed", "fastpath"])
@@ -238,6 +258,66 @@ def test_canonicalize_entities_merges_shared_alias(spark):
     out = canon.canonicalize_entities(linked, adf).collect()
     # E9 shares surface 'lutece' with E4 → canonical is min(E4, E9) = E4
     assert out[0]["canonical_id"] == "E4"
+
+
+def test_canonicalize_entities_equals_pairwise_components(spark):
+    """The driver star-per-surface union-find gives the same canonical
+    ids as connected_components over the pairwise shared-surface edge
+    list: a surface shared by three ids, plus a chain across two
+    surfaces."""
+    adf = spark.createDataFrame(
+        [("Lutece", "E7", "Place", 0.5), ("lutece", "E3", "Place", 0.4),
+         ("LUTECE!", "E5", "Place", 0.3), ("paris", "E3", "Place", 0.9),
+         # chain: B2 ~ A9 via 'gaul', A9 ~ C1 via 'gallia'
+         ("Gaul", "B2", "Place", 1.0), ("gaul", "A9", "Place", 1.0),
+         ("Gallia", "A9", "Place", 1.0), ("gallia", "C1", "Place", 1.0),
+         ("Rome", "R1", "Place", 1.0)],
+        "alias string, entity_id string, entity_type string, weight double",
+    )
+    ids = ["E7", "E3", "E5", "B2", "A9", "C1", "R1"]
+    linked = spark.createDataFrame(
+        [("d1", i, "x", "X", 0, 1, e, "Place", 1.0, "exact")
+         for i, e in enumerate(ids)],
+        "doc_id string, seg_id int, alias string, surface string, tok_begin int,"
+        " n_toks int, entity_id string, entity_type string, score double, method string",
+    )
+    a = adf.select(link._norm_alias("alias").alias("s"), "entity_id")
+    pairs = (
+        a.alias("x").join(a.alias("y"), "s")
+        .select(F.col("x.entity_id").alias("src"), F.col("y.entity_id").alias("dst"))
+        .filter(F.col("src") < F.col("dst"))
+    )
+    cc = {r["node"]: r["component"]
+          for r in canon.connected_components(pairs, small_graph_threshold=0).collect()}
+    want = {e: cc.get(e, e) for e in ids}
+    out = canon.canonicalize_entities(linked, adf)
+    assert out.columns == ["entity_id", *[c for c in linked.columns if c != "entity_id"],
+                           "canonical_id"]
+    got = {r["entity_id"]: r["canonical_id"] for r in out.collect()}
+    assert got == want
+    assert got == {"E7": "E3", "E3": "E3", "E5": "E3", "B2": "A9", "A9": "A9",
+                   "C1": "A9", "R1": "R1"}
+
+
+def test_pipeline_emits_canonical_entity_ids(spark):
+    """A dictionary surface claimed by two entity ids: the build's
+    entity triples name the canonical id, never the linked one."""
+    docs = spark.createDataFrame(
+        [("d1", [("text", "We walked through Lutece at dawn.", None, 0)])],
+        "doc_id string, spans array<struct<kind string, text string, media_ref string, offset int>>",
+    )
+    adf = spark.createDataFrame(
+        [("Lutece", "E9", "Place", 0.5), ("lutece", "E4", "Place", 0.4),
+         ("paris", "E4", "Place", 0.9)],
+        "alias string, entity_id string, entity_type string, weight double",
+    )
+    stages = pipeline.run(spark, docs, alias_df=adf, max_tokens=50)
+    (row,) = stages["linked"].collect()
+    assert row["entity_id"] == "E9"  # higher prior wins the exact link
+    ents = {v for r in stages["triples"].collect() for v in (r["subj"], r["obj"])
+            if v.startswith("ent:")}
+    assert ents == {"ent:E4"}
+    pipeline.release(stages)
 
 
 def test_bucketed_stage_join_is_shuffle_free(spark, tmp_path):
